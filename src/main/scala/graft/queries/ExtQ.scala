@@ -510,7 +510,7 @@ object ExtQ {
     val emb = Tables.embeddings(s, d)
     val model = SimilaritySearch.ivfPqModel(
       emb.filter(!TextQ.SemBatchPred), TextQ.AnnNlist, TextQ.AnnM, TextQ.AnnCb)
-    val index = TextQ.annCorpusIndexOfStore(s, d)
+    val index = TextQ.annCorpusArtifact.existing(s, d)
     // `nprobe = None` resolves through the CORPUS index generation's
     // sidecar (the streamAnnProbe posture — one serving entry rule);
     // catalog st11 pins Some(2) so its oracle hash can never depend on

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Text
 import graft.operators.{Dedup, SequencePack, SimilaritySearch, TextAnalysis}
+import graft.sources.Artifact
 
 /** Text-analysis, dedup, and similarity-search query catalog over the
   * `documents` / `embeddings` tables (training-data-pipeline operators,
@@ -331,15 +332,6 @@ object TextQ {
   private[graft] def sigPfx(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat(lit("x"), substring(sig, 1, 2))
 
-  /** Params/layout tag for [[bandArtifact]] (ArtifactStore `sub`):
-    * 16 hashes, 2 bands, dual layout (compact full-scan copy +
-    * 2-hex-char-prefix-partitioned probe copy), "r" = the precomputed
-    * bucket_rank/corpus_rank guard columns (round 18). Bump when the
-    * banding config or on-disk layout changes so stale-param artifacts
-    * are invalidated and GC'd like stale-data generations.
-    */
-  private[graft] val BandArtifactTag = "h16b2p2dualr"
-
   /** The band store is written in TWO layouts under one generation —
     * the standard scan-vs-probe split of a production signature store:
     *   - `full/` — compact files for the batch consumers that scan the
@@ -354,9 +346,14 @@ object TextQ {
     * One compute, two writes, `_SUCCESS` at the generation root only
     * after BOTH copies land (a torn write is rebuilt, never read).
     */
-  private[graft] def bandArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_band_artifact",
-      Seq(new java.io.File(d, "documents.parquet")), sub = BandArtifactTag) { dir =>
+  private[graft] val bandArtifact = Artifact("band", "graft_band_artifact",
+      Seq("documents.parquet"),
+      // params/layout tag: 16 hashes, 2 bands, dual layout (compact
+      // full-scan copy + 2-hex-char-prefix-partitioned probe copy),
+      // "r" = the precomputed bucket_rank/corpus_rank guard columns
+      // (round 18). Bump when the banding config or on-disk layout
+      // changes so stale-param stores are invalidated and GC'd.
+      "h16b2p2dualr") { (s, d, dir) =>
       val sigs = bandSigsCompute(s, d).cache()
       try {
         sigs.write.mode("overwrite").parquet(s"$dir/full")
@@ -366,15 +363,13 @@ object TextQ {
           .repartition(col("sig_pfx"))
           .write.mode("overwrite").partitionBy("sig_pfx").parquet(s"$dir/pfx")
       } finally sigs.unpersist()
-      // compact the scan copy BEFORE publishing (the _SUCCESS gate
-      // below): every full-scan consumer then pays one footer open per
+      // compact the scan copy BEFORE publishing (the store's _SUCCESS
+      // gate): every full-scan consumer then pays one footer open per
       // ~target-sized file instead of one per shuffle partition, and no
       // reader can ever observe the swap. pfx/ stays as written — one
       // file per partition directory already (the repartition above).
       graft.sources.Compaction.recordCompaction(s, dir,
         graft.sources.Compaction.compactInPlace(s, s"$dir/full"))
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
     }
 
   /** Session view of the band artifact (building it first if this
@@ -429,16 +424,13 @@ object TextQ {
   private[graft] def prunedCorpusBands(s: org.apache.spark.sql.SparkSession,
                                        d: String, prefixes: Seq[String],
                                        withCorpusRank: Boolean = false) =
-    // resolveExisting, not resolve: this is the per-trigger probe the
+    // existing, not apply: this is the per-trigger probe the
     // streaming ingests (st6/st7) run inside foreachBatch — a missing
     // store there is a maintenance outage and must fail loudly, never
     // silently rebuild the corpus banding inside a micro-batch trigger
     // (StreamBoundarySpec pins it; the queries' pre-stream resolve /
     // dedup-maintain own the build)
-    storeRead(s, graft.sources.ArtifactStore.resolveExisting(s,
-        "graft_band_artifact",
-        Seq(new java.io.File(d, "documents.parquet")),
-        sub = BandArtifactTag) + "/pfx")
+    storeRead(s, bandArtifact.existing(s, d) + "/pfx")
       .where(col("sig_pfx").isin(prefixes: _*))
       .filter(col("source") =!= "src0")
       .select("band", ("band_sig" :: "doc_id" ::
@@ -453,11 +445,10 @@ object TextQ {
     * re-running tokenize + xxhash64 + sort over the corpus per query.
     * Same (length, mtime) keying and `_SUCCESS` gating as the bands.
     */
-  private[graft] def gramArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_gram_artifact",
+  private[graft] val gramArtifact = Artifact("gram", "graft_gram_artifact",
       // params tag: unigram (n=1) xxhash64 fingerprints — a gram-order
       // or hash change must invalidate the store, not serve stale sets
-      Seq(new java.io.File(d, "documents.parquet")), sub = "g1x64") { dir =>
+      Seq("documents.parquet"), "g1x64") { (s, d, dir) =>
       Dedup.gramSets(Tables.documents(s, d)).write.mode("overwrite").parquet(dir)
       // still inside the store's build lock (in-JVM readers resolve
       // through it), same maintenance window as the build itself
@@ -470,29 +461,6 @@ object TextQ {
     // is ~100 KB; the verify joins reference it up to three times per
     // query, each a cheap re-scan through the memoized relation
     storeRead(s, gramArtifact(s, d))
-
-  /** The persisted 64-bit SimHash fingerprint artifact `(doc_id,
-    * simhash64, source)` — the fourth leg of the signature store: the
-    * corpus's production-width simhash table, computed once per data
-    * generation (a per-row native projection over text) and probed by
-    * the incremental hamming-ball tier (d18) so a daily ingest never
-    * re-fingerprints the corpus. Same (length, mtime) keying,
-    * `_SUCCESS` gating and params-tag invalidation as the band store.
-    */
-  private[graft] def simhashArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_simhash_artifact",
-      Seq(new java.io.File(d, "documents.parquet")), sub = "w64") { dir =>
-      val docs = Tables.documents(s, d)
-      Dedup.simhash64(docs)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .write.mode("overwrite").parquet(dir)
-      graft.sources.Compaction.recordCompaction(s, dir,
-        graft.sources.Compaction.compactInPlace(s, dir))
-    }
-
-  private[graft] def simhashFps(s: org.apache.spark.sql.SparkSession, d: String) =
-    // uncached (round 21, same reasoning as bandSigs)
-    storeRead(s, simhashArtifact(s, d))
 
   /** The s08/s09 IVF+PQ configuration — single-sourced because the
     * stored index (annArtifact) MUST be encoded with the same model the
@@ -520,16 +488,15 @@ object TextQ {
     * the same generation, so probes rebuild them driver-side (a ≤
     * codebookSize-row collect) rather than reading them from disk.
     */
-  private[graft] def annArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_ann_artifact",
-      Seq(new java.io.File(d, "embeddings.parquet")),
+  private[graft] val annArtifact = Artifact("index", "graft_ann_artifact",
+      Seq("embeddings.parquet"),
       // "dcah" = dual codes-as-array layout + hash-drawn model seeds
       // (round 16): the per-subspace code columns became ONE array<int>
       // column when the encode went native, the residual tier's rcodes
       // joined them, and the centroid/codebook seeds moved to the
       // hash-gated draw — layout AND params changes, so the tag must
       // invalidate older stores
-      sub = s"nl${AnnNlist}m${AnnM}cb${AnnCb}dcah$annTrainSubTag") { dir =>
+      s"nl${AnnNlist}m${AnnM}cb${AnnCb}dcah$annTrainSubTag") { (s, d, dir) =>
       val emb = Tables.embeddings(s, d)
       val model = SimilaritySearch.ivfPqModel(emb, AnnNlist, AnnM, AnnCb)
       val rmodel = SimilaritySearch.ivfRPqModel(emb, AnnNlist, AnnM, AnnCb)
@@ -699,50 +666,6 @@ object TextQ {
       k = k, nprobe = np, refine = refine)
   }
 
-  /** The (kind, sources, sub) key of the CORPUS-slice index store —
-    * the delta-ingest tier's main index (the clfStoreKey rule: one
-    * definition for build and probe). The sub carries the model
-    * params plus the batch-split residue: retuning either must
-    * invalidate the store (ADVICE r13 rule).
-    */
-  private def annCorpusStoreKey(d: String) = ("graft_ann_corpus_artifact",
-    Seq(new java.io.File(d, "embeddings.parquet")),
-    s"nl${AnnNlist}m${AnnM}cb${AnnCb}b7$annTrainSubTag")
-
-  /** The delta-ingest tier's MAIN index: the raw-PQ code table of the
-    * CORPUS slice only, encoded under a model whose seeds are drawn
-    * from the corpus only (no lookahead into the arriving batch — the
-    * d22/t18/d25 stance applied to the ANN model), cell-partitioned
-    * like [[annArtifact]]. This is the index that exists BEFORE a
-    * batch arrives; s12/st11 encode the batch under the same frozen
-    * model and union the delta codes into the probe, so new vectors
-    * become searchable without touching (let alone rebuilding) this
-    * store — between `ann-maintain` generations the index is
-    * append-only. `ann-maintain` owns the build.
-    */
-  private[graft] def annCorpusArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = annCorpusStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
-      val corpus = Tables.embeddings(s, d).filter(!SemBatchPred)
-      val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
-      SimilaritySearch.ivfPqEncode(corpus, model)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-    }
-  }
-
-  /** Probe-side locator of the corpus index — resolveExisting, never
-    * resolve (the clfModelOfStore rule): a missing store at probe time
-    * (above all inside st11's stream) means `ann-maintain` didn't run
-    * for this generation, and it fails loudly naming that fix instead
-    * of encoding the corpus inside a micro-batch.
-    */
-  private[graft] def annCorpusIndexOfStore(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val (kind, srcs, sub) = annCorpusStoreKey(d)
-    graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
-  }
-
   /** Fold-in recommendation threshold for the delta tier: when the
     * un-indexed delta outgrows this fraction of the main index,
     * `ann-maintain` says so and the probe metric reads hot. The delta
@@ -811,13 +734,11 @@ object TextQ {
         minJaccard = ClusterJaccard)
       .select("doc_a", "doc_b")
 
-  private[graft] def clusterArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_cluster_artifact",
+  private[graft] val clusterArtifact = Artifact("clusters", "graft_cluster_artifact",
       // params tag: the labels are only valid for edges verified at
       // THIS threshold over THIS banding config — retuning either must
       // invalidate the persisted clustering (ADVICE r13)
-      Seq(new java.io.File(d, "documents.parquet")),
-      sub = s"j${ClusterJaccard}_h16b2") { dir =>
+      Seq("documents.parquet"), s"j${ClusterJaccard}_h16b2") { (s, d, dir) =>
       // ranked-block form over the ALL-rows bucket_rank: within the
       // corpus slice ranks stay doc_id-ordered (gaps only widen
       // blocks), which is all the owner-block argument needs
@@ -833,6 +754,28 @@ object TextQ {
   private[graft] def prevClusters(s: org.apache.spark.sql.SparkSession, d: String) =
     // uncached (round 21, same reasoning as bandSigs)
     storeRead(s, clusterArtifact(s, d))
+
+  /** The persisted 64-bit SimHash fingerprint artifact `(doc_id,
+    * simhash64, source)` — the fourth leg of the signature store: the
+    * corpus's production-width simhash table, computed once per data
+    * generation (a per-row native projection over text) and probed by
+    * the incremental hamming-ball tier (d18) so a daily ingest never
+    * re-fingerprints the corpus. Same (length, mtime) keying,
+    * `_SUCCESS` gating and params-tag invalidation as the band store.
+    */
+  private[graft] val simhashArtifact = Artifact("simhash", "graft_simhash_artifact",
+      Seq("documents.parquet"), "w64") { (s, d, dir) =>
+      val docs = Tables.documents(s, d)
+      Dedup.simhash64(docs)
+        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+        .write.mode("overwrite").parquet(dir)
+      graft.sources.Compaction.recordCompaction(s, dir,
+        graft.sources.Compaction.compactInPlace(s, dir))
+    }
+
+  private[graft] def simhashFps(s: org.apache.spark.sql.SparkSession, d: String) =
+    // uncached (round 21, same reasoning as bandSigs)
+    storeRead(s, simhashArtifact(s, d))
 
   /** Shared tail of the incremental-dedup queries (d09 memoized / d15
     * artifact): exact-Jaccard verify of the asymmetric candidates at
@@ -1159,14 +1102,6 @@ object TextQ {
   private[graft] val SemIters = 2
   private[graft] val SemTau = 0.40
 
-  /** Params/layout tag for the semantic artifact (ArtifactStore sub),
-    * single-sourced between the build ([[semArtifact]]) and the
-    * probe-side resolveExisting ([[prunedSemState]]) so the two can
-    * never address different stores. "dual" = compact + byclust
-    * layouts; "hs" = hash-gated k-means seeding (round 16).
-    */
-  private[graft] val SemArtifactTag = s"k${SemK}i${SemIters}t${SemTau}dualhs"
-
   /** Ingest split for the semantic tier: vec_id ≡ 7 (mod 10) plays the
     * arriving batch (≈10% of vectors, size-invariant across SFs),
     * everything else the existing corpus whose state the artifact
@@ -1248,12 +1183,12 @@ object TextQ {
     * `_SUCCESS`-at-generation-root gating as the dual-layout band
     * store: a torn write is rebuilt, never read.
     */
-  private[graft] def semArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_sem_artifact",
-      Seq(new java.io.File(d, "embeddings.parquet")),
-      // layout tag: dual state layout (compact + cluster-partitioned);
-      // a param OR layout change must bump this sub (ADVICE r13 rule)
-      sub = SemArtifactTag) { dir =>
+  private[graft] val semArtifact = Artifact("sem", "graft_sem_artifact",
+      Seq("embeddings.parquet"),
+      // params/layout tag: "dual" = compact + byclust layouts, "hs" =
+      // hash-gated k-means seeding (round 16); a param OR layout change
+      // must bump this sub (ADVICE r13 rule)
+      s"k${SemK}i${SemIters}t${SemTau}dualhs") { (s, d, dir) =>
       val emb = Tables.embeddings(s, d)
       val cents = graft.operators.SimilaritySearch.kmeansCentroids(
         emb, SemK, SemIters)
@@ -1296,8 +1231,6 @@ object TextQ {
       // byclust/ is one file per partition directory already
       graft.sources.Compaction.recordCompaction(s, dir,
         graft.sources.Compaction.compactInPlace(s, s"$dir/state"))
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
     }
 
   /** The PARTITION-PRUNED semantic-state probe: only the `byclust/`
@@ -1309,15 +1242,35 @@ object TextQ {
     */
   private[graft] def prunedSemState(s: org.apache.spark.sql.SparkSession,
                                     d: String, clusters: Seq[Int]) =
-    // resolveExisting: probe-side twin of the semArtifact build — d21
-    // resolves the artifact before probing, and a trigger-shaped
-    // consumer must never own the corpus clustering build
-    storeRead(s, graft.sources.ArtifactStore.resolveExisting(s,
-        "graft_sem_artifact",
-        Seq(new java.io.File(d, "embeddings.parquet")),
-        sub = SemArtifactTag) + "/byclust")
+    // existing: d21 resolves the artifact before probing, and a
+    // trigger-shaped consumer must never own the corpus clustering build
+    storeRead(s, semArtifact.existing(s, d) + "/byclust")
       .where(col("cluster").isin(clusters: _*))
       .select(col("cluster"), col("vec_id"))
+
+  /** The delta-ingest tier's MAIN index: the raw-PQ code table of the
+    * CORPUS slice only, encoded under a model whose seeds are drawn
+    * from the corpus only (no lookahead into the arriving batch — the
+    * d22/t18/d25 stance applied to the ANN model), cell-partitioned
+    * like [[annArtifact]]. This is the index that exists BEFORE a
+    * batch arrives; s12/st11 encode the batch under the same frozen
+    * model and union the delta codes into the probe, so new vectors
+    * become searchable without touching (let alone rebuilding) this
+    * store — between `ann-maintain` generations the index is
+    * append-only. `ann-maintain` owns the build; probes (st11's
+    * stream above all) use `.existing`. The sub carries the model
+    * params plus the batch-split residue: retuning either must
+    * invalidate the store (ADVICE r13 rule).
+    */
+  private[graft] val annCorpusArtifact = Artifact("corpus", "graft_ann_corpus_artifact",
+      Seq("embeddings.parquet"),
+      s"nl${AnnNlist}m${AnnM}cb${AnnCb}b7$annTrainSubTag") { (s, d, dir) =>
+      val corpus = Tables.embeddings(s, d).filter(!SemBatchPred)
+      val model = SimilaritySearch.ivfPqModel(corpus, AnnNlist, AnnM, AnnCb)
+      SimilaritySearch.ivfPqEncode(corpus, model)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(dir)
+    }
 
   /** DSIR tier parameters — single-sourced across d20 (batch), d22
     * (incremental), the frozen-LM artifact, and both oracles. */
@@ -1403,12 +1356,11 @@ object TextQ {
     * lookups per leg — no corpus scan, no retrain. Same
     * `_SUCCESS`-at-root gating as every other artifact family.
     */
-  private[graft] def dsirArtifact(s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.sources.ArtifactStore.resolve(s, "graft_dsir_artifact",
-      Seq(new java.io.File(d, "documents.parquet")),
+  private[graft] val dsirArtifact = Artifact("dsir", "graft_dsir_artifact",
+      Seq("documents.parquet"),
       // params tag: vocab size + batch-split residue — retuning either
       // must invalidate the store (ADVICE r13 rule)
-      sub = s"v${DsirVocab}b7") { dir =>
+      s"v${DsirVocab}b7") { (s, d, dir) =>
       val corpus = Tables.documents(s, d).filter(!DocBatchPred)
       def persist(sfx: String, train: org.apache.spark.sql.DataFrame): Unit = {
         val m = graft.operators.TextAnalysis.bigramLmModel(train, DsirVocab)
@@ -1419,8 +1371,6 @@ object TextQ {
       }
       persist("t", corpus.filter(col("source") === "src1"))
       persist("r", corpus)
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
     }
 
   /** Classifier tier parameters — single-sourced across t17 (full
@@ -1479,22 +1429,12 @@ object TextQ {
     * the arriving batch excluded (no lookahead — the d22 stance; the
     * oracle freezes the same slice). Labels and per-label totals are
     * re-derived at probe time (pure functions of the counts — the
-    * dsirArtifact `cp` principle). Same `_SUCCESS`-at-root gating and
-    * generation GC as every other artifact family.
+    * dsirArtifact `cp` principle). The sub is the params tag: bucket
+    * width + batch-split residue — retuning either must invalidate the
+    * store (ADVICE r13 rule).
     */
-  /** The (kind, sources, sub) key of the classifier store — ONE
-    * definition shared by the build ([[clfArtifact]]) and the probe
-    * ([[clfModelOfStore]]) so the two can never address different
-    * directories. The sub is the params tag: bucket width +
-    * batch-split residue — retuning either must invalidate the store
-    * (ADVICE r13 rule).
-    */
-  private def clfStoreKey(d: String) = ("graft_clf_artifact",
-    Seq(new java.io.File(d, "documents.parquet")), s"h${ClfHashHexChars}b7")
-
-  private[graft] def clfArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = clfStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
+  private[graft] val clfArtifact = Artifact("clf", "graft_clf_artifact",
+      Seq("documents.parquet"), s"h${ClfHashHexChars}b7") { (s, d, dir) =>
       import graft.operators.TextAnalysis.{SampleLcgA, SampleLcgC, SampleModulus}
       val gate = pmod(col("doc_id") * lit(SampleLcgA) + lit(SampleLcgC),
         lit(SampleModulus))
@@ -1503,13 +1443,10 @@ object TextQ {
       val m = graft.operators.TextAnalysis.hashClfTrain(
         train, hashHexChars = ClfHashHexChars)
       m.counts.coalesce(1).write.mode("overwrite").parquet(s"$dir/counts")
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
     }
-  }
 
   /** Probe-side loader of the frozen classifier model —
-    * resolveExisting, never resolve: a missing store at probe time
+    * `.existing`, never a build: a missing store at probe time
     * (above all inside a streaming trigger, st9) means the maintenance
     * path (`dedup-maintain` or the query's own pre-stream
     * [[clfArtifact]]) didn't run for this generation, and it fails
@@ -1519,8 +1456,7 @@ object TextQ {
     */
   private[graft] def clfModelOfStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.operators.TextAnalysis.HashClfModel = {
-    val (kind, srcs, sub) = clfStoreKey(d)
-    val dir = graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
+    val dir = clfArtifact.existing(s, d)
     graft.operators.TextAnalysis.hashClfModelOf(
       s.read.parquet(s"$dir/counts"), ClfHashHexChars)
   }
@@ -1533,15 +1469,6 @@ object TextQ {
   private[graft] val DecontamSketchItems = 200000L
   private[graft] val DecontamSketchBits = 2000000L
 
-  /** The (kind, sources, sub) key of the decontamination store — one
-    * definition shared by build and probe (the clfStoreKey rule). The
-    * sub carries gram width, eval slice, and sketch size: retuning any
-    * of them must invalidate the store (ADVICE r13 rule).
-    */
-  private def decontamStoreKey(d: String) = ("graft_decontam_artifact",
-    Seq(new java.io.File(d, "documents.parquet")),
-    s"n${DecontamN}s19e200kb2m")
-
   /** The persisted frozen eval-gram model of the decontamination tier:
     * the held-out suite's distinct gram fingerprints (`grams/`, the
     * exact-verify relation) plus the Bloom sketch aggregated over them
@@ -1550,12 +1477,12 @@ object TextQ {
     * suites change when benchmarks do, not per ingest batch — so the
     * d25/st10 probes never re-tokenize the eval side. The sketch is
     * aggregated from the PERSISTED grams (not the source) so the two
-    * files can never disagree. Same `_SUCCESS`-at-root gating and
-    * generation GC as every artifact family.
+    * files can never disagree. The sub carries gram width, eval slice,
+    * and sketch size: retuning any of them must invalidate the store
+    * (ADVICE r13 rule).
     */
-  private[graft] def decontamArtifact(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val (kind, srcs, sub) = decontamStoreKey(d)
-    graft.sources.ArtifactStore.resolve(s, kind, srcs, sub = sub) { dir =>
+  private[graft] val decontamArtifact = Artifact("decontam", "graft_decontam_artifact",
+      Seq("documents.parquet"), s"n${DecontamN}s19e200kb2m") { (s, d, dir) =>
       import graft.operators.TextAnalysis
       TextAnalysis.evalGramHashes(
           Tables.documents(s, d).filter(col("source") === DecontamEvalSrc),
@@ -1565,13 +1492,10 @@ object TextQ {
         .agg(call_function("graft_bloom_agg", col("g"),
           lit(DecontamSketchItems), lit(DecontamSketchBits)).as("bf"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/bloom")
-      val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true).close()
     }
-  }
 
   /** Probe-side loader of the frozen decontamination model —
-    * resolveExisting, never resolve (the clfModelOfStore rule): a
+    * `.existing`, never a build (the clfModelOfStore rule): a
     * missing store at probe time fails loudly naming the maintenance
     * fix instead of tokenizing the eval suite inside a micro-batch.
     * The sketch row is a bounded driver collect (≤ sketchBits/8
@@ -1580,8 +1504,7 @@ object TextQ {
     */
   private[graft] def decontamModelOfStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.operators.TextAnalysis.DecontamModel = {
-    val (kind, srcs, sub) = decontamStoreKey(d)
-    val dir = graft.sources.ArtifactStore.resolveExisting(s, kind, srcs, sub = sub)
+    val dir = decontamArtifact.existing(s, d)
     graft.operators.TextAnalysis.DecontamModel(
       s.read.parquet(s"$dir/bloom").collect()(0).getAs[Array[Byte]](0),
       s.read.parquet(s"$dir/grams"))

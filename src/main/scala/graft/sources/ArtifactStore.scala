@@ -2,20 +2,84 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared resolver for persisted DERIVED-DATA artifacts (band
-  * signatures, gram fingerprints, MOT input tables, the m11 anchor
-  * base): deterministic functions of source data, computed once per
-  * source-data GENERATION and FileScanned by every consumer thereafter
-  * — the steady-state production posture (compute-once maintenance vs
-  * per-query recompute).
+/** One persisted DERIVED-DATA store, declared once: `name` labels it
+  * in maintenance reports and Bench's pre-touch, `(kind, sources,
+  * sub)` address it in [[ArtifactStore]] (`sources` are file names
+  * inside the data dir, in hashing order), and `build(spark, dataDir,
+  * dir)` writes it. Everything else is derived from the declaration:
+  * the build-if-missing resolve ([[apply]]), the probe-side lookup
+  * ([[existing]]), the root `_SUCCESS` (written by the store once
+  * `build` returns), Bench's untimed pre-touch (one loop over
+  * [[Artifact.all]]) and the maintenance CLIs' sets (`dedup-maintain`
+  * builds the declarations whose sources are exactly
+  * `documents.parquet`, `ann-maintain` those over exactly
+  * `embeddings.parquet`).
+  */
+final class Artifact private (val name: String, val kind: String,
+    val sources: Seq[String], val sub: String,
+    build: (SparkSession, String, String) => Unit) {
+  private def files(d: String) = sources.map(new java.io.File(d, _))
+
+  /** The store's directory for data dir `d`, built first if this data
+    * generation has not been (fully) written yet. */
+  def apply(s: SparkSession, d: String): String =
+    ArtifactStore.resolve(s, kind, files(d), sub)(build(s, d, _))
+
+  /** The same directory for PROBE paths that must never own a build —
+    * above all the per-trigger probes inside a streaming foreachBatch:
+    * a store missing there means the maintenance job (dedup-maintain /
+    * ann-maintain, or the query's own pre-stream resolve) didn't run
+    * for this generation, and silently rebuilding a corpus-sized store
+    * inside a micro-batch trigger would bury a maintenance outage as a
+    * mystery slow trigger. Fails loudly instead (StreamBoundarySpec
+    * pins it).
+    */
+  def existing(s: SparkSession, d: String): String =
+    ArtifactStore.resolveExisting(s, kind, files(d), sub)
+}
+
+object Artifact {
+  private val declared = scala.collection.mutable.ArrayBuffer.empty[Artifact]
+
+  /** Declares a catalog store and lists it in [[all]]. */
+  def apply(name: String, kind: String, sources: Seq[String], sub: String = "")(
+      build: (SparkSession, String, String) => Unit): Artifact = {
+    val a = unlisted(name, kind, sources, sub)(build)
+    declared.synchronized(declared += a)
+    a
+  }
+
+  /** A store outside the catalog (the Anchor sweep's extra frame
+    * counts, test fixtures): resolved the same way, never in [[all]]. */
+  def unlisted(name: String, kind: String, sources: Seq[String], sub: String = "")(
+      build: (SparkSession, String, String) => Unit): Artifact =
+    new Artifact(name, kind, sources, sub, build)
+
+  /** Every declared store, in declaration order. The declarations are
+    * vals of the objects below, so loading those objects first makes
+    * the list complete whatever ran before. */
+  def all: Seq[Artifact] = {
+    Seq(graft.queries.TextQ, graft.Derived, graft.queries.KernelQ)
+    declared.synchronized(declared.toList)
+  }
+}
+
+/** Shared resolver behind [[Artifact]] for persisted DERIVED-DATA
+  * stores (band signatures, gram fingerprints, MOT input tables, the
+  * m11 anchor base): deterministic functions of source data, computed
+  * once per source-data GENERATION and FileScanned by every consumer
+  * thereafter — the steady-state production posture (compute-once
+  * maintenance vs per-query recompute). Only [[Artifact]] calls it:
+  * each store is declared once, and its key is never copied.
   *
   * Layout: `<tmp>/<kind>/<datasetHash>/<sub?>/<genTag>` where
   * `datasetHash` identifies WHICH dataset (md5 of the source paths —
   * sf0.01 and sf0.1 artifacts must coexist) and `genTag` identifies
   * the data generation (fold of each source file's length + mtime — a
   * regenerated file at the same path gets a new tag, so stale
-  * signatures are never served). `_SUCCESS` gates readiness: a torn
-  * write is rebuilt, never read.
+  * signatures are never served). `_SUCCESS` gates readiness: the store
+  * writes it only after `build` returns, so a torn write is rebuilt,
+  * never read.
   *
   * `sub` is the PARAMS/LAYOUT tag: callers fold the artifact's
   * algorithm parameters and on-disk layout version into it (e.g. the
@@ -25,8 +89,9 @@ import org.apache.spark.sql.SparkSession
   * it, retuning a threshold would silently serve stale artifacts
   * until the source data happened to regenerate. Only one sub value
   * exists per kind at any code version (params are code constants),
-  * so stale sibling subs are GC'd alongside stale generations.
-  *
+  * so stale sibling subs are GC'd alongside stale generations — which
+  * is why every declaration needs its own kind (ArtifactCatalogSpec
+  * guards it).
   * STALE-GENERATION GC: when a new generation's artifact is built, the
   * SAME dataset's superseded generation directories are deleted — the
   * driver regenerates testdata between rounds, and without this every
@@ -65,17 +130,10 @@ object ArtifactStore {
     (dsDir, base, s"$base/$genTag")
   }
 
-  /** [[resolve]]'s read-only twin for PROBE paths that must never own
-    * a build — above all the per-trigger probes inside a streaming
-    * foreachBatch: an artifact missing there means the maintenance job
-    * (dedup-maintain / ann-maintain, or the query's own pre-stream
-    * resolve) didn't run for this generation, and silently rebuilding
-    * a corpus-sized store inside a micro-batch trigger would bury a
-    * maintenance outage as a mystery slow trigger. Fails loudly
-    * instead (StreamBoundarySpec pins it).
-    */
-  def resolveExisting(spark: SparkSession, kind: String,
-                      sources: Seq[java.io.File], sub: String = ""): String = {
+  /** [[resolve]]'s read-only twin: fails if the generation is unbuilt
+    * (see [[Artifact.existing]]). */
+  private[sources] def resolveExisting(spark: SparkSession, kind: String,
+      sources: Seq[java.io.File], sub: String): String = {
     val (_, _, dir) = locate(kind, sources, sub)
     val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -101,8 +159,9 @@ object ArtifactStore {
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Returns the artifact directory, building it via `build(dir)` if
-    * this generation has not been (fully) written yet.
+  /** Returns the artifact directory, building it via `build(dir)` and
+    * then writing its root `_SUCCESS` if this generation has not been
+    * (fully) written yet.
     *
     * The monitor is keyed by the SUB-LEVEL BASE path (stable across
     * data generations), not the per-generation dir: a long-lived
@@ -112,8 +171,8 @@ object ArtifactStore {
     * other is correct anyway — the second would GC the first's tree
     * mid-build if they ran concurrently.
     */
-  def resolve(spark: SparkSession, kind: String, sources: Seq[java.io.File],
-              sub: String = "")(build: String => Unit): String =
+  private[sources] def resolve(spark: SparkSession, kind: String,
+      sources: Seq[java.io.File], sub: String)(build: String => Unit): String =
     buildLocks.computeIfAbsent(locate(kind, sources, sub)._2, _ => new Object)
       .synchronized { resolveLocked(spark, kind, sources, sub)(build) }
 
@@ -155,6 +214,8 @@ object ArtifactStore {
           .filter(p => p.getName.length != 12)
           .foreach(p => fs.delete(p, true))
       build(dir)
+      val ok = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+      fs.create(ok, true).close()
     }
     dir
   }

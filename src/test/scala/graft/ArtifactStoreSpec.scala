@@ -27,14 +27,12 @@ class ArtifactStoreSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(src.toPath, "gen1")
       val kind = s"graft_test_artifact_${System.nanoTime()}"
       var builds = 0
-      def resolve(): String =
-        sources.ArtifactStore.resolve(spark, kind, Seq(src)) { dir =>
-          builds += 1
-          // a minimal "parquet write": the store only checks _SUCCESS
-          new java.io.File(dir).mkdirs()
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, "_SUCCESS"), "")
-        }
+      val art = sources.Artifact.unlisted("test", kind, Seq("data.txt")) { (_, _, dir) =>
+        builds += 1
+        // a minimal "parquet write": the store writes _SUCCESS itself
+        new java.io.File(dir).mkdirs()
+      }
+      def resolve(): String = art(spark, tmp.getPath)
       val d1 = resolve()
       assert(builds == 1)
       assert(resolve() == d1 && builds == 1, "second resolve must not rebuild")
@@ -86,12 +84,10 @@ class ArtifactStoreSpec extends AnyFunSuite {
         java.nio.file.Files.writeString(a.toPath, "aaaa")
         java.nio.file.Files.writeString(b.toPath, "bbbbbbbb")
         val kind = s"graft_test_artifact_${System.nanoTime()}"
-        def resolve(src: java.io.File): String =
-          sources.ArtifactStore.resolve(spark, kind, Seq(src)) { dir =>
-            new java.io.File(dir).mkdirs()
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(dir, "_SUCCESS"), "")
-          }
+        val art = sources.Artifact.unlisted("test", kind, Seq("data.txt")) {
+          (_, _, dir) => new java.io.File(dir).mkdirs()
+        }
+        def resolve(src: java.io.File): String = art(spark, src.getParent)
         val da = resolve(a)
         val db = resolve(b)
         assert(new java.io.File(da).exists(),

@@ -35,7 +35,7 @@ class StreamBoundarySpec extends AnyFunSuite {
       e.getMessage.contains("maintenance"),
       s"missing-store probe must name the artifact and the fix: ${e.getMessage}")
     // and the probe must NOT have built anything as a side effect
-    // (resolve() would have): a subsequent resolveExisting still throws
+    // (apply would have): a subsequent existing lookup still throws
     intercept[IllegalStateException] {
       graft.queries.TextQ.prunedCorpusBands(spark, d, Seq("00"))
     }
@@ -60,12 +60,12 @@ class StreamBoundarySpec extends AnyFunSuite {
   test("annCorpusIndexOfStore fails loudly on an unbuilt corpus index") {
     val d = freshDir("sbound_annc", "embeddings.parquet")
     val e = intercept[IllegalStateException] {
-      graft.queries.TextQ.annCorpusIndexOfStore(spark, d)
+      graft.queries.TextQ.annCorpusArtifact.existing(spark, d)
     }
     assert(e.getMessage.contains("graft_ann_corpus_artifact"),
       s"missing-store probe must name the artifact: ${e.getMessage}")
     val built = graft.queries.TextQ.annCorpusArtifact(spark, d)
-    assert(graft.queries.TextQ.annCorpusIndexOfStore(spark, d) == built)
+    assert(graft.queries.TextQ.annCorpusArtifact.existing(spark, d) == built)
   }
 
   test("annDeltaCoded emits the delta/main growth metric and unions losslessly") {
@@ -95,13 +95,10 @@ class StreamBoundarySpec extends AnyFunSuite {
     // would turn every probe into a false maintenance outage)
     val d = freshDir("sbound_same", "documents.parquet")
     val built = graft.queries.TextQ.bandArtifact(spark, d)
-    // the tag comes from the single source, not a copied literal — a
+    // the key comes from the one declaration, not a copied literal — a
     // layout-tag bump must not silently turn this into a stale-sub
     // probe (it did in round 18's rank-column bump)
-    val probed = graft.sources.ArtifactStore.resolveExisting(spark,
-      "graft_band_artifact",
-      Seq(new java.io.File(d, "documents.parquet")),
-      sub = graft.queries.TextQ.BandArtifactTag)
+    val probed = graft.queries.TextQ.bandArtifact.existing(spark, d)
     assert(built == probed)
   }
 }
